@@ -18,9 +18,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def _driver_union_find(e: DataFrame) -> DataFrame:
-    """Min-id union-find over a collected (a, b) edge list — the
-    small-graph fast path of ``connected_components``."""
+def _driver_union_find(e: DataFrame, rows: list) -> DataFrame:
+    """Min-id union-find over the collected (a, b) edge ``rows`` of
+    ``e`` — the small-graph fast path of ``connected_components``.  The
+    labels come back as a LocalRelation (``local_df``): a JVM
+    ``LocalTableScan``, not a Python-RDD scan on every later action."""
+    from pyspark.sql.types import StructField, StructType
+
+    from onto_text_tag_spark.session import local_df
+
     parent: dict = {}
 
     def find(x):
@@ -31,7 +37,6 @@ def _driver_union_find(e: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    rows = e.collect()
     for r in rows:
         a, b = r["a"], r["b"]
         parent.setdefault(a, a)
@@ -42,16 +47,13 @@ def _driver_union_find(e: DataFrame) -> DataFrame:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
 
-    spark = e.sparkSession
-    out = [(n, find(n)) for n in parent]
-    schema = e.schema  # (a, b) — reuse the node type for both columns
-    from pyspark.sql.types import StructField, StructType
-
-    return spark.createDataFrame(
-        out,
+    node_type = e.schema["a"].dataType  # reused for both columns
+    return local_df(
+        e.sparkSession,
+        [(n, find(n)) for n in parent],
         StructType([
-            StructField("node", schema["a"].dataType, False),
-            StructField("comp", schema["a"].dataType, False),
+            StructField("node", node_type, False),
+            StructField("comp", node_type, False),
         ]),
     )
 
@@ -90,13 +92,18 @@ def connected_components(
     while a 1M-edge union-find is milliseconds in CPython.  Same
     adaptive philosophy as Spark's broadcast-join threshold: the
     distributed algorithm is the scale path, the local one removes the
-    small-input floor.  Results are identical (min-id labeling).
+    small-input floor.  Results are identical (min-id labeling).  One
+    capped ``collect`` both sizes and fetches the edge list.
     ``driver_threshold=0`` forces the distributed path (tests).
     """
     e = _canon_edges(edges, src, dst).localCheckpoint(eager=True)
 
-    if driver_threshold and e.count() <= driver_threshold:
-        return _driver_union_find(e)
+    if driver_threshold:
+        # one action decides and fetches: more than the threshold rows
+        # back means the graph takes the distributed path
+        rows = e.limit(driver_threshold + 1).collect()
+        if len(rows) <= driver_threshold:
+            return _driver_union_find(e, rows)
 
     # initial labels: every endpoint labels itself
     labels = (

@@ -226,8 +226,10 @@ def tag_documents_joined(
     if not ngram_lengths:
         # empty dictionary: no candidate grams → empty mentions frame
         # with the output schema (not an AttributeError on grams=None)
-        return documents.sparkSession.createDataFrame(
-            [],
+        from onto_text_tag_spark.session import local_df
+
+        return local_df(
+            documents.sparkSession, [],
             "url string, tok_begin int, tok_end int, surface string, "
             "curie string, pref_label string, ont string",
         )

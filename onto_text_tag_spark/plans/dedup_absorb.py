@@ -75,6 +75,7 @@ from onto_text_tag_spark.plans.kg_absorb import (
     _recover_swap,
     _swap_subtree,
 )
+from onto_text_tag_spark.session import local_df
 from onto_text_tag_spark.sinks import (
     append_stage_iceberg,
     commit_stage,
@@ -156,7 +157,7 @@ def fold_demotions(spark: SparkSession, root: str) -> dict:
         .join(demoted, id_col, "left_anti"),
         input_fingerprint=f"fold-{n_demoted}",
     )
-    empty = spark.createDataFrame([], f"{id_col} string").repartition(1)
+    empty = local_df(spark, [], f"{id_col} string")
     if ice:
         for stage, df in (
             ("deduped", read_stage(spark, staging, "deduped")),
@@ -188,11 +189,19 @@ def fold_demotions(spark: SparkSession, root: str) -> dict:
             "sec": round(_time.time() - t0, 2)}
 
 
-def dedup_batch_already_committed(root: str, batch_fp: str) -> bool:
-    return any(
-        s.get("metrics", {}).get("batch_fingerprint") == batch_fp
-        for s in snapshot_log(root, "clusters")
+def dedup_batch_metrics(root: str, batch_fp: str) -> dict | None:
+    """The metrics the commit of ``batch_fp`` recorded in the
+    ``clusters`` snapshot log (``batch_docs``, ``batch_survivors``,
+    ``batch_demoted_base``), or None when the batch is not committed."""
+    return next(
+        (s["metrics"] for s in snapshot_log(root, "clusters")
+         if s.get("metrics", {}).get("batch_fingerprint") == batch_fp),
+        None,
     )
+
+
+def dedup_batch_already_committed(root: str, batch_fp: str) -> bool:
+    return dedup_batch_metrics(root, batch_fp) is not None
 
 
 def init_dedup_root(
@@ -215,8 +224,6 @@ def init_dedup_root(
     with it.  ``store_shingles=True`` (the streaming default) lays the
     store out with the ``sh`` column, which is what lets absorbs verify
     near-dups without any base corpus file to re-read."""
-    from onto_text_tag_spark.sinks import write_stage
-
     sig_ddl = f"{id_col} string, sig array<long>" + (
         ", sh array<long>" if store_shingles else ""
     ) + ", digest long"
@@ -226,10 +233,8 @@ def init_dedup_root(
         ("deduped", doc_schema),
         ("demoted", f"{id_col} string"),
     ):
-        write_stage(
-            spark.createDataFrame([], schema).repartition(1),
-            root, stage, input_fingerprint=input_fingerprint,
-        )
+        write_stage(local_df(spark, [], schema), root, stage,
+                    input_fingerprint=input_fingerprint)
 
 
 def absorb_dedup_batch(

@@ -36,6 +36,7 @@ from onto_text_tag_spark.operators.cooccur import (
 )
 from onto_text_tag_spark.operators.tagger import tag_documents
 from onto_text_tag_spark.plans.kg_pipeline import extract_texts
+from onto_text_tag_spark.session import local_df
 from onto_text_tag_spark.sinks import (
     append_stage_iceberg,
     commit_stage,
@@ -138,19 +139,14 @@ def init_kg_root(
         transitive_closure_rows,
     )
     from onto_text_tag_spark.schemas import MENTIONS
-    from onto_text_tag_spark.session import local_df
 
-    empty_mentions = spark.createDataFrame([], MENTIONS).repartition(1)
-    write_stage(empty_mentions, kg_root, "mentions",
+    write_stage(local_df(spark, [], MENTIONS), kg_root, "mentions",
                 input_fingerprint=input_fingerprint)
-    empty_terms = spark.createDataFrame(
-        [], "url string, _terms array<string>"
-    ).repartition(1)
-    write_stage(empty_terms, kg_root, "doc_terms",
-                input_fingerprint=input_fingerprint)
+    write_stage(local_df(spark, [], "url string, _terms array<string>"),
+                kg_root, "doc_terms", input_fingerprint=input_fingerprint)
 
     branch_schema = "subj string, obj string, weight long"
-    empty_branch = spark.createDataFrame([], branch_schema).repartition(1)
+    empty_branch = local_df(spark, [], branch_schema)
     isa_pairs = [
         (r["curie"], r["parent_curie"])
         for r in onto_rows
@@ -357,18 +353,7 @@ def absorb_batch(
             delta_doc_terms, assume_deduped=True),
         input_fingerprint=batch_fp,
     ))
-    if ice:
-        old_edges = (
-            read_stage(spark, kg_root, "triples")
-            .where(F.col("pred") == "co_occurs_with")
-            .select(F.col("subj").alias("src"),
-                    F.col("obj").alias("dst"), "weight")
-        )
-    else:
-        old_edges = spark.read.parquet(live_cooccur).select(
-            F.col("subj").alias("src"), F.col("obj").alias("dst"),
-            "weight"
-        )
+    old_edges = _live_cooccur_edges(spark, kg_root)
     timed("merge_edges", lambda: run_stage(
         spark, staging, "merged_cooccur",
         lambda: merge_cooccurrence_edges(old_edges, delta_edges).select(
@@ -468,6 +453,18 @@ def absorb_batch(
     }
 
 
+def _live_cooccur_edges(spark: SparkSession, kg_root: str) -> DataFrame:
+    """The committed co-occurrence branch as ``(src, dst, weight)`` —
+    one read path for both backends (the ``pred`` filter prunes the
+    file-backed read to its ``pred=co_occurs_with`` directory)."""
+    return (
+        read_stage(spark, kg_root, "triples")
+        .where(F.col("pred") == "co_occurs_with")
+        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"),
+                "weight")
+    )
+
+
 def _ensure_retracted_stage(spark: SparkSession, kg_root: str) -> None:
     """Lazily bootstrap the ``retracted`` delete-set stage on roots
     created before retraction existed (older init_kg_root layouts)."""
@@ -475,7 +472,7 @@ def _ensure_retracted_stage(spark: SparkSession, kg_root: str) -> None:
         read_manifest(kg_root, "retracted")
     except OSError:
         write_stage(
-            spark.createDataFrame([], "url string").repartition(1),
+            local_df(spark, [], "url string"),
             kg_root, "retracted", input_fingerprint="init",
         )
 
@@ -723,18 +720,7 @@ def retract_batch(
     neg_edges = cooccurrence_edges_from_arrays(
         gone_terms, assume_deduped=True
     ).withColumn("weight", -F.col("weight"))
-    if ice:
-        old_edges = (
-            read_stage(spark, kg_root, "triples")
-            .where(F.col("pred") == "co_occurs_with")
-            .select(F.col("subj").alias("src"),
-                    F.col("obj").alias("dst"), "weight")
-        )
-    else:
-        old_edges = spark.read.parquet(live_cooccur).select(
-            F.col("subj").alias("src"), F.col("obj").alias("dst"),
-            "weight"
-        )
+    old_edges = _live_cooccur_edges(spark, kg_root)
     run_stage(
         spark, staging, "merged_cooccur",
         lambda: merge_cooccurrence_edges(old_edges, neg_edges)
@@ -901,7 +887,7 @@ def fold_retractions(spark: SparkSession, kg_root: str) -> dict:
             live_mention_triples)
 
     # clear the delete set LAST (the fold's commit point)
-    empty = spark.createDataFrame([], "url string").repartition(1)
+    empty = local_df(spark, [], "url string")
     if ice:
         man = read_manifest(kg_root, "retracted")
         write_stage(
@@ -945,13 +931,11 @@ def ensure_dict_overlay_stages(spark: SparkSession, kg_root: str) -> None:
         read_manifest(kg_root, "doc_terms_overlay")
     except OSError:
         write_stage(
-            spark.createDataFrame([], MENTIONS).repartition(1),
+            local_df(spark, [], MENTIONS),
             kg_root, "mentions_overlay", input_fingerprint="init",
         )
         write_stage(
-            spark.createDataFrame(
-                [], "url string, _terms array<string>"
-            ).repartition(1),
+            local_df(spark, [], "url string, _terms array<string>"),
             kg_root, "doc_terms_overlay", input_fingerprint="init",
         )
 
@@ -1044,10 +1028,9 @@ def fold_dict_overlay(spark: SparkSession, kg_root: str) -> dict:
         )
         for stage, empty in (
             ("mentions_overlay",
-             spark.createDataFrame([], MENTIONS).repartition(1)),
+             local_df(spark, [], MENTIONS)),
             ("doc_terms_overlay",
-             spark.createDataFrame(
-                 [], "url string, _terms array<string>").repartition(1)),
+             local_df(spark, [], "url string, _terms array<string>")),
         ):
             man = read_manifest(kg_root, stage)
             write_stage(
@@ -1071,13 +1054,12 @@ def fold_dict_overlay(spark: SparkSession, kg_root: str) -> dict:
     # truncate the overlay LAST (the fold's commit point)
     run_stage(
         spark, staging, "mentions_overlay",
-        lambda: spark.createDataFrame([], MENTIONS).repartition(1),
+        lambda: local_df(spark, [], MENTIONS),
         input_fingerprint=fp,
     )
     run_stage(
         spark, staging, "doc_terms_overlay",
-        lambda: spark.createDataFrame(
-            [], "url string, _terms array<string>").repartition(1),
+        lambda: local_df(spark, [], "url string, _terms array<string>"),
         input_fingerprint=fp,
     )
     _swap_subtree(os.path.join(staging, "mentions_overlay", "data"),
@@ -1298,15 +1280,13 @@ def absorb_links(
         read_manifest(kg_root, "links")
     except OSError:
         write_stage(
-            spark.createDataFrame(
-                [], "src_url string, dst_url string, anchor string"
-            ).repartition(1),
+            local_df(spark, [],
+                     "src_url string, dst_url string, anchor string"),
             kg_root, "links", input_fingerprint="init",
         )
         write_stage(
-            spark.createDataFrame(
-                [], "src_host string, dst_host string, weight bigint"
-            ).repartition(1),
+            local_df(spark, [],
+                     "src_host string, dst_host string, weight bigint"),
             kg_root, "host_graph", input_fingerprint="init",
         )
 
@@ -1438,8 +1418,7 @@ def absorb_term_sketch(
     except OSError:
         initialized_now = True
         write_stage(
-            spark.createDataFrame([], "curie string, ks array<bigint>")
-            .repartition(1),
+            local_df(spark, [], "curie string, ks array<bigint>"),
             kg_root, "term_sketch", input_fingerprint="init",
             metrics={"k": k},
         )
@@ -1577,10 +1556,10 @@ def absorb_trends(
     except OSError:
         initialized_now = True
         write_stage(
-            spark.createDataFrame(
-                [], "curie string, bucket timestamp, n_docs bigint, "
-                    "delta_prev_bucket bigint",
-            ).repartition(1),
+            local_df(
+                spark, [], "curie string, bucket timestamp, n_docs bigint, "
+                           "delta_prev_bucket bigint",
+            ),
             kg_root, "trends", input_fingerprint="init",
             metrics={"bucket": bucket},
         )

@@ -70,6 +70,7 @@ from onto_text_tag_spark.plans.kg_absorb import (
     read_retracted,
 )
 from onto_text_tag_spark.plans.kg_pipeline import extract_texts
+from onto_text_tag_spark.session import local_df
 from onto_text_tag_spark.sinks import (
     commit_stage,
     read_manifest,
@@ -221,7 +222,7 @@ def update_dictionary(
                 .select("url")
             )
         if not parts:
-            return spark.createDataFrame([], "url string")
+            return local_df(spark, [], "url string")
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -397,7 +398,6 @@ def update_ontology(
     from onto_text_tag_spark.operators.closure import (
         transitive_closure_rows,
     )
-    from onto_text_tag_spark.session import local_df
 
     t0 = time.time()
     if batch_already_committed(kg_root, batch_fp):

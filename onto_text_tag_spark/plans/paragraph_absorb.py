@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from onto_text_tag_spark.operators.dedup import content_digest
 from onto_text_tag_spark.plans.kg_absorb import _append_batch_files
+from onto_text_tag_spark.session import local_df
 from onto_text_tag_spark.sinks import (
     append_stage_iceberg,
     commit_stage,
@@ -67,7 +68,7 @@ def init_paragraph_root(
     absorb commits.  ``doc_schema`` is the DELTA document schema; the
     ``deduped`` stage holds it with ``text`` rewritten plus the
     ``n_paragraphs``/``n_kept`` audit columns."""
-    empty_docs = spark.createDataFrame([], doc_schema)
+    empty_docs = local_df(spark, [], doc_schema)
     deduped_schema = (
         empty_docs
         .withColumn("n_paragraphs", F.lit(0).cast("long"))
@@ -79,7 +80,7 @@ def init_paragraph_root(
         ("deduped", deduped_schema),
     ):
         write_stage(
-            spark.createDataFrame([], schema).repartition(1),
+            local_df(spark, [], schema),
             root, stage, input_fingerprint=input_fingerprint,
         )
 

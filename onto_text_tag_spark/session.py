@@ -66,21 +66,31 @@ def local_df(spark: SparkSession, rows, schema):
 
     ``rows``: list of tuples or dicts; ``schema``: DDL string or StructType
     (explicit — pandas must not guess types for empty inputs).
+
+    Empty ``rows`` go through an empty Arrow table: PySpark sends an
+    empty pandas frame down the non-Arrow path, which plans the same
+    Python ``Scan ExistingRDD``.  Writing the empty LocalRelation still
+    produces exactly one (zero-row) parquet file, so bootstrap stages
+    keep a footer to read their schema from.
     """
     import pandas as pd
 
     from pyspark.sql.types import StructType
 
-    if isinstance(schema, StructType):
-        names = [f.name for f in schema.fields]
-    else:  # "a int, b string" DDL
+    if not isinstance(schema, StructType):  # "a int, b string" DDL
         from pyspark.sql.types import _parse_datatype_string
 
-        names = [f.name for f in _parse_datatype_string(schema).fields]
-    if rows and isinstance(rows[0], dict):
+        schema = _parse_datatype_string(schema)
+    names = [f.name for f in schema.fields]
+    if not rows:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return spark.createDataFrame(
+            to_arrow_schema(schema).empty_table(), schema)
+    if isinstance(rows[0], dict):
         pdf = pd.DataFrame(rows, columns=names)
     else:
-        pdf = pd.DataFrame(rows or None, columns=names)
+        pdf = pd.DataFrame(rows, columns=names)
     return spark.createDataFrame(pdf, schema)
 
 

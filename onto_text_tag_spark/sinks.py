@@ -574,8 +574,21 @@ def read_stage(
     iceberg``) reads back via ``spark.table``; historical reads of it
     go through Iceberg's native time travel (``VERSION AS OF`` /
     ``snapshot-id``), not the sidecar file lists.
+
+    Current file-backed reads take their data schema from the manifest
+    (``schema``, recorded by every write and kept by every commit), so
+    Spark runs no one-task schema-inference job.  The manifest schema is
+    used only when it provably equals what inference would return
+    (``_manifest_read_schema``): its non-partition columns must match,
+    by name, order, type and metadata, the Spark schema in the footer of
+    the file inference reads.  A missing schema, no data file, a footer
+    without a Spark schema or any mismatch falls back to the inferred
+    read.  Partition columns are left out of the given schema, so Spark
+    discovers them from the directory names, typed and placed (last)
+    exactly as before.
     """
     data_path, manifest_path, _s = _stage_paths(root, stage)
+    current: dict = {}
     if os.path.exists(manifest_path):
         try:
             current = read_manifest(root, stage)
@@ -591,7 +604,9 @@ def read_stage(
                 )
             return spark.table(current["table"])
     if snapshot_id is None:
-        return spark.read.parquet(data_path)
+        schema = _manifest_read_schema(spark, data_path, current)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(data_path)
     manifest = read_manifest(root, stage, snapshot_id=snapshot_id)
     files = manifest.get("files")
     if files is None:
@@ -610,6 +625,81 @@ def read_stage(
         )
     reader = spark.read.option("basePath", data_path)
     return reader.parquet(*paths)
+
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file-listing filter: ``_``/``.``-prefixed names are not
+    data (``_``-prefixed names holding ``=`` are partition dirs)."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _as_nullable(node):
+    """Schema JSON with every nullability flag set: a file source reads
+    any data schema, inferred or given, as ``asNullable``."""
+    if isinstance(node, list):
+        return [_as_nullable(v) for v in node]
+    if not isinstance(node, dict):
+        return node
+    return {
+        k: True if k in ("nullable", "containsNull", "valueContainsNull")
+        else v if k == "metadata" else _as_nullable(v)
+        for k, v in node.items()
+    }
+
+
+def _manifest_read_schema(spark: SparkSession, data_path: str, manifest: dict):
+    """The data schema ``read_stage`` may hand to ``spark.read.schema``
+    instead of inferring it, or None when that is not provably the same
+    read.
+
+    With ``mergeSchema`` off, Spark infers a parquet schema from ONE
+    footer: the first listed leaf by path (summary files first, if
+    any), whose Spark schema it deserializes.  This finds that file
+    with the same listing rules and compares its footer schema with the
+    manifest's non-partition columns — on the driver, no Spark job."""
+    import pyarrow.parquet as pq
+
+    from pyspark.sql.types import StructType
+
+    if not manifest.get("schema") or spark.conf.get(
+        "spark.sql.parquet.mergeSchema", "false"
+    ).lower() == "true":
+        return None
+    leaves = []
+    for dirpath, dirs, files in os.walk(data_path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        rel = os.path.relpath(dirpath, data_path)
+        for f in files:
+            if f.startswith(("_metadata", "_common_metadata")):
+                return None  # summary files: inference reads those
+            if not _hidden(f):
+                leaves.append(f if rel == "." else os.path.join(rel, f))
+    if not leaves:
+        return None  # nothing to infer from: keep today's error
+    first = min(leaves)
+    part_cols = {
+        seg.split("=", 1)[0] for seg in first.split(os.sep)[:-1]
+        if "=" in seg
+    }
+    try:
+        meta = pq.read_schema(os.path.join(data_path, first)).metadata
+        footer = StructType.fromJson(
+            _as_nullable(json.loads(meta[_SPARK_ROW_METADATA])))
+        recorded = StructType.fromJson(_as_nullable(manifest["schema"]))
+    except (OSError, KeyError, TypeError, ValueError):
+        # unreadable footer, no Spark schema in it, unparsable schema
+        return None
+    data_fields = [f for f in recorded.fields if f.name not in part_cols]
+    if data_fields != footer.fields:
+        return None
+    return StructType(data_fields)
 
 
 def read_stage_increment(

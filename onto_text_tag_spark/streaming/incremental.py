@@ -304,11 +304,18 @@ def start_crawl_sink(
     of the dedup decision (backend-independent — works for file- and
     table-backed roots alike):
 
+    * whether the KG absorbs at all is read from the ``clusters``
+      snapshot log: the ``batch_survivors`` count the epoch's dedup
+      commit recorded (``dedup_batch_metrics``).  No Spark action
+      decides it, and a replayed epoch, whose dedup step no-ops,
+      reads the same record;
     * the KG absorbs ``read_deduped ⋉ batch ids`` — this epoch's
       admitted pages; a re-delivered url from an earlier epoch can
       slip into the semi-join, but ``absorb_batch``'s own seen-url
       anti-join (against the physical doc_terms stage) makes the
-      over-approximation exact;
+      over-approximation exact.  An epoch with no survivors of its
+      own skips the absorb even if it re-delivered live urls: they
+      are in the KG already, so the absorb would add nothing;
     * the retraction takes the FULL ``demoted`` delete set —
       ``retract_batch``'s already-retracted anti-join reduces it to
       exactly the urls not yet forgotten, so each epoch retracts its
@@ -328,6 +335,7 @@ def start_crawl_sink(
 
     from onto_text_tag_spark.plans.dedup_absorb import (
         absorb_dedup_batch,
+        dedup_batch_metrics,
         read_deduped,
     )
     from onto_text_tag_spark.plans.kg_absorb import (
@@ -335,11 +343,7 @@ def start_crawl_sink(
         compact_stage,
         retract_batch,
     )
-    from onto_text_tag_spark.sinks import (
-        iceberg_available,
-        read_manifest,
-        read_stage,
-    )
+    from onto_text_tag_spark.sinks import read_manifest, read_stage
 
     dedup_root = os.path.join(root, "dedup")
     kg_root = os.path.join(root, "kg")
@@ -348,7 +352,7 @@ def start_crawl_sink(
         spark = batch_df.sparkSession
         fp = f"crawl-epoch-{epoch_id}"
 
-        absorb_dedup_batch(
+        result = absorb_dedup_batch(
             spark, dedup_root, None, batch_df, batch_fp=fp,
             id_col=id_col, text_col=text_col, threshold=threshold,
             num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
@@ -357,10 +361,12 @@ def start_crawl_sink(
             minhash_method=minhash_method,
         )
 
-        batch_ids = batch_df.select(id_col).distinct()
-        survivors = read_deduped(spark, dedup_root).join(
-            batch_ids, id_col, "left_semi")
-        if survivors.limit(1).count() > 0:
+        # the survivor count this epoch's dedup commit recorded: read
+        # from the store, so a replay (dedup no-op) decides the same way
+        if dedup_batch_metrics(dedup_root, fp)["batch_survivors"]:
+            batch_ids = batch_df.select(id_col).distinct()
+            survivors = read_deduped(spark, dedup_root).join(
+                batch_ids, id_col, "left_semi")
             absorb_batch(
                 spark, kg_root, survivors,
                 dictionary_rows, batch_fp=fp, lang=lang,

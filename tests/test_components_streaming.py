@@ -63,6 +63,32 @@ def test_connected_components_paths_agree(spark):
     assert dist == uf
 
 
+def test_connected_components_driver_path_is_local_scan(spark):
+    """The union-find labels come back as a LocalRelation (a JVM
+    ``LocalTableScan``, no Python ``ExistingRDD`` scan) equal to the
+    distributed labels; one capped collect decides the path, so an edge
+    set of exactly ``driver_threshold`` rows stays on the driver and one
+    more row goes distributed (checkpointed ``ExistingRDD`` scans)."""
+    from onto_text_tag_spark.operators.components import connected_components
+    from onto_text_tag_spark.session import local_df
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    for rows in ([("a", "b"), ("c", "b"), ("d", "e")], []):
+        edges = local_df(spark, rows, "src string, dst string")
+        uf = connected_components(edges, driver_threshold=3)
+        assert "LocalTableScan" in plan(uf)
+        assert "ExistingRDD" not in plan(uf)
+        dist = connected_components(edges, driver_threshold=0)
+        assert {tuple(r) for r in uf.collect()} == {
+            tuple(r) for r in dist.collect()}
+    edges = local_df(spark, [("a", "b"), ("c", "b"), ("d", "e")],
+                     "src string, dst string")
+    assert "ExistingRDD" in plan(
+        connected_components(edges, driver_threshold=2))
+
+
 def test_canonicalize_surfaces(spark):
     from onto_text_tag_spark.operators.components import canonicalize_surfaces
 

@@ -10,6 +10,8 @@ corpus — including the co-occurrence weight decrements of the demoted,
 term-bearing page.  Also pins replay idempotence (stream restart from
 the same checkpoint, double retraction) and the merge-on-read shape
 (physical mentions keep the demoted rows; the live view masks them).
+The second epoch runs with ``compact_every=1``, so those pins also hold
+over stages the sink has compacted to one file each.
 """
 
 import os
@@ -110,7 +112,11 @@ def test_crawl_sink_kg_equals_batch_build_over_live_corpus(
         retract_batch,
     )
     from onto_text_tag_spark.session import local_df
-    from onto_text_tag_spark.sinks import read_stage, snapshot_log
+    from onto_text_tag_spark.sinks import (
+        read_manifest,
+        read_stage,
+        snapshot_log,
+    )
     from onto_text_tag_spark.streaming.incremental import (
         init_crawl_root,
         start_crawl_sink,
@@ -158,11 +164,12 @@ def test_crawl_sink_kg_equals_batch_build_over_live_corpus(
     kg_root = os.path.join(root, "kg")
     dedup_root = os.path.join(root, "dedup")
 
-    def run_stream():
+    def run_stream(compact_every=None):
         stream = (
             spark.readStream.schema("url string, text string").parquet(src)
         )
-        q = start_crawl_sink(stream, root, dict_rows, ckpt, **KNOBS)
+        q = start_crawl_sink(stream, root, dict_rows, ckpt,
+                             compact_every=compact_every, **KNOBS)
         try:
             q.processAllAvailable()
         finally:
@@ -177,7 +184,19 @@ def test_crawl_sink_kg_equals_batch_build_over_live_corpus(
     assert doc_b in live_m0
 
     b1.coalesce(1).write.mode("append").parquet(src)
-    run_stream()  # restart from checkpoint — epoch 1 only
+    # restart from checkpoint — epoch 1 only, then small-files
+    # compaction of every append-grown stage of both roots
+    run_stream(compact_every=1)
+    for stage_root, stage in (
+        (dedup_root, "signatures"), (dedup_root, "deduped"),
+        (dedup_root, "demoted"), (kg_root, "mentions"),
+        (kg_root, "doc_terms"), (kg_root, "triples"),
+    ):
+        man = read_manifest(stage_root, stage)
+        assert "compaction" in man["metrics"], stage
+        # one file per stage (per pred= directory for triples)
+        dirs = [os.path.dirname(f) for f in man["files"]]
+        assert len(dirs) == len(set(dirs)), (stage, man["files"])
 
     # --- ground truth: batch KG pipeline over the LIVE deduped corpus ---
     live_docs = read_deduped(spark, dedup_root).cache()

@@ -262,3 +262,91 @@ def test_register_pq_views(spark, tmp_path):
         "SELECT vec_id FROM pq_codes ORDER BY recon_err DESC, vec_id "
         "LIMIT 3").collect()
     assert len(worst) == 3
+
+
+def _jobs(spark) -> set:
+    """Ids of the jobs run so far, once the listener bus has drained
+    (the status tracker is fed asynchronously)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+
+
+def _assert_read_stage_as_inferred(spark, root, stage) -> set:
+    """``read_stage`` equals ``spark.read.parquet`` of the stage's data
+    dir — schema (names, order, types, nullability) and rows; returns
+    the ids of the jobs the ``read_stage`` call ran."""
+    import os
+
+    from onto_text_tag_spark.sinks import read_stage
+
+    before = _jobs(spark)
+    got = read_stage(spark, root, stage)
+    ran = _jobs(spark) - before
+    want = spark.read.parquet(os.path.join(root, stage, "data"))
+    assert got.schema == want.schema, stage
+    assert sorted(map(repr, got.collect())) == sorted(
+        map(repr, want.collect())), stage
+    return ran
+
+
+def test_read_stage_takes_manifest_schema_without_a_job(
+    spark, kg_root, tmp_path
+):
+    """Current file-backed reads use the manifest's schema once it
+    matches the footer inference would read: no schema-inference job,
+    and the same schema and rows as the inferred read for plain,
+    ``partition_by`` (numeric-looking values, partition column written
+    mid-schema), ``write_stage_branches``, empty bootstrapped and
+    absorb-appended stages.  A manifest whose schema disagrees with
+    the footers falls back to the inferred read."""
+    import json
+    import os
+
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        IntegerType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from onto_text_tag_spark.session import local_df
+    from onto_text_tag_spark.sinks import write_stage, write_stage_branches
+
+    root = str(tmp_path / "stages")
+    schema = StructType([
+        StructField("k", StringType(), False),
+        StructField("year", IntegerType(), True),
+        StructField("score", DoubleType(), True),
+        StructField("tags", ArrayType(StringType(), False), True),
+    ])
+    rows = [("a", 2024, 1.5, ["x"]), ("b", 2025, None, []),
+            ("c", 2024, 2.0, None)]
+    write_stage(local_df(spark, rows, schema), root, "plain")
+    write_stage(local_df(spark, rows, schema), root, "parted",
+                partition_by=["year"])
+    write_stage_branches(
+        {"2024": local_df(spark, rows[:2], schema),
+         "x": local_df(spark, rows[2:], schema)},
+        root, "branches", partition_col="src")
+    write_stage(local_df(spark, [], "url string"), root, "empty")
+
+    for stage_root, stage in (
+        (root, "plain"), (root, "parted"), (root, "branches"),
+        (root, "empty"),
+        # absorb-appended (mentions, doc_terms, retracted) and the
+        # branch-written, absorb-grown triples of the fixture root
+        (kg_root, "mentions"), (kg_root, "doc_terms"),
+        (kg_root, "retracted"), (kg_root, "triples"),
+    ):
+        assert _assert_read_stage_as_inferred(
+            spark, stage_root, stage) == set(), stage
+
+    manifest_path = os.path.join(root, "plain", "_MANIFEST.json")
+    with open(manifest_path) as fh:
+        man = json.load(fh)
+    man["schema"]["fields"][1]["type"] = "long"  # footer says int
+    with open(manifest_path, "w") as fh:
+        json.dump(man, fh)
+    assert _assert_read_stage_as_inferred(spark, root, "plain")
