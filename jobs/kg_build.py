@@ -103,10 +103,7 @@ def main() -> None:
         doc_term_arrays,
     )
     from onto_text_tag_spark.operators.tagger import tag_documents
-    from onto_text_tag_spark.plans.kg_pipeline import (
-        extract_texts,
-        load_ontology_rows,
-    )
+    from onto_text_tag_spark.plans.kg_pipeline import load_ontology_rows
     from onto_text_tag_spark.session import apply_engine_conf, local_df
     from onto_text_tag_spark.sinks import (
         fingerprint_parquet_inputs,
@@ -186,13 +183,10 @@ def main() -> None:
             )
         else:
             corpus = spark.read.parquet(args.input)
-        if args.from_html:
-            # P1 fuses into the tagging batch (tag_documents
-            # html_col=...): one Arrow crossing, text never
-            # materialized JVM-side
-            docs = corpus.drop("text")
-        else:
-            docs = extract_texts(corpus)
+        # P1 fuses into the tagging batch (tag_documents html_col=...):
+        # one Arrow crossing, text never materialized JVM-side.  With a
+        # text column, html is only the fallback for null-text rows.
+        docs = corpus.drop("text") if args.from_html else corpus
         if args.lang and "lang" in docs.columns:
             docs = docs.where(F.col("lang") == args.lang)
         id_col = "url" if "url" in docs.columns else "doc_id"
@@ -226,7 +220,7 @@ def main() -> None:
         spark, args.output, "mentions",
         lambda: tag_documents(
             docs, dict_rows, id_col=id_col,
-            html_col="html" if args.from_html and not args.warc else None,
+            html_col="html" if "html" in docs.columns else None,
             warc_mode=args.warc,
         ),
         input_fingerprint=fp,
@@ -246,9 +240,18 @@ def main() -> None:
     # path was the skewed co-occurrence aggregate: measured 1.41x 2->8
     # core speedup vs 2.08x for this split, and 32% more 8-core wall
     # time (see write_stage_branches docstring).
+    #
+    # Written at core width: AQE coalesces the groupBy(url) shuffle by
+    # its bytes (1 MB minPartitionSize floor), and doc_terms is small in
+    # bytes, so it landed in 1-2 files and every consumer below ran on
+    # 1-2 cores.  The work downstream is not proportional to those
+    # bytes: the co-occurrence pair explode is quadratic in terms per
+    # doc.  One file per core lets every triple and node branch use
+    # every core.
     doc_terms = timed("doc_terms", lambda: run_stage(
         spark, args.output, "doc_terms",
-        lambda: doc_term_arrays(mentions),
+        lambda: doc_term_arrays(mentions).repartition(
+            spark.sparkContext.defaultParallelism, "url"),
         input_fingerprint=fp,
     ))
 

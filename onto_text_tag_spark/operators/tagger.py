@@ -17,7 +17,7 @@ Physical design for 10^12-document scale:
   shuffle-join against the dictionary is needed on the fact-table side.
 * Tagging is embarrassingly parallel: no shuffle, pipelined with the
   parquet scan; column pruning keeps ``html:binary`` unread when ``text``
-  is already materialized.
+  is already materialized and no html fallback is asked for.
 * Output partitioning: mentions inherit input file-split partitioning;
   downstream aggregations repartition by their own keys.
 """
@@ -25,6 +25,7 @@ Physical design for 10^12-document scale:
 from __future__ import annotations
 
 from collections.abc import Iterator
+from itertools import repeat
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -81,11 +82,23 @@ def tag_documents(
     construction — SURVEY.md §1.1 pins it at broadcast scale), compiled,
     and broadcast; matching runs in ``mapInPandas`` batches.
 
-    ``html_col``: tag straight from raw HTML — P1 extraction
-    (byte-identical ``extract_text``) runs INSIDE the tagging batch, so
-    the raw-HTML production path crosses the JVM↔Python Arrow boundary
-    once instead of twice (extract UDF then tag) and the intermediate
-    text column is never shipped back to the JVM.
+    ``html_col``: tag from raw HTML — P1 extraction (byte-identical
+    ``extract_text``) runs INSIDE the tagging batch, so the raw-HTML
+    path crosses the JVM↔Python Arrow boundary once instead of twice
+    (extract UDF then tag) and the intermediate text column is never
+    shipped back to the JVM.  One kernel serves every case, per row:
+    ``text`` when it is not null, else ``extract_text(html)``.
+
+    * ``text_col`` absent: ``html_col`` is the source; every row is
+      extracted (``kg_build --from-html``).
+    * ``text_col`` present: ``html_col`` is the fallback for null-text
+      rows.  The source selects ``when(text IS NULL, html)``, so only
+      those rows' HTML crosses to Python — the same rows
+      ``extract_texts`` would extract, without its second scan and
+      extract-UDF stage.  The trade: the parquet scan now reads the
+      ``html`` column too (its ``ReadSchema`` holds it).
+    * ``html_col=None``: text only; column pruning keeps ``html`` out
+      of the scan.
 
     ``warc_mode``: ``documents`` is a ``binaryFile`` scan of WARC crawl
     archives (path, content); record parse + P1 extraction + tagging all
@@ -101,8 +114,9 @@ def tag_documents(
     automaton = compile_dictionary(rows)
     bc = spark.sparkContext.broadcast(automaton)
 
+    from onto_text_tag_spark.functions.html_extract import extract_text
+
     if warc_mode:
-        from onto_text_tag_spark.functions.html_extract import extract_text
         from onto_text_tag_spark.sources.warc import parse_warc_file
 
         def tag_batches(
@@ -128,39 +142,34 @@ def tag_documents(
         source = documents.select("path", "content")
         return source.mapInPandas(tag_batches, schema=MENTIONS)
 
+    # without html_col, a missing text column fails at the select below
+    has_text = html_col is None or text_col in documents.columns
+    cols = [F.col(id_col).cast("string").alias(id_col)]
+    if has_text:
+        cols.append(F.col(text_col))
     if html_col is not None:
-        from onto_text_tag_spark.functions.html_extract import extract_text
-
-        def tag_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ac = bc.value
-            for batch in batches:
-                out: list[tuple] = []
-                for url, html in zip(batch[id_col], batch[html_col]):
-                    if html is None:
-                        continue
-                    if isinstance(html, (bytes, bytearray, memoryview)):
-                        html = bytes(html).decode("utf-8", errors="replace")
-                    out.extend(tag_text(ac, url, extract_text(html)))
-                yield pd.DataFrame(out, columns=MENTION_COLUMNS)
-
-        source = documents.select(
-            F.col(id_col).cast("string").alias(id_col), F.col(html_col)
+        # with text present, only null-text rows ship their html
+        cols.append(
+            F.when(F.col(text_col).isNull(), F.col(html_col)).alias(html_col)
+            if has_text else F.col(html_col)
         )
-        return source.mapInPandas(tag_batches, schema=MENTIONS)
 
     def tag_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ac = bc.value
         for batch in batches:
+            texts = batch[text_col] if has_text else repeat(None)
+            htmls = batch[html_col] if html_col is not None else repeat(None)
             out: list[tuple] = []
-            for url, text in zip(batch[id_col], batch[text_col]):
+            for url, text, html in zip(batch[id_col], texts, htmls):
+                if text is None and html is not None:
+                    if isinstance(html, (bytes, bytearray, memoryview)):
+                        html = bytes(html).decode("utf-8", errors="replace")
+                    text = extract_text(html)
                 if text is not None:
                     out.extend(tag_text(ac, url, text))
             yield pd.DataFrame(out, columns=MENTION_COLUMNS)
 
-    source = documents.select(
-        F.col(id_col).cast("string").alias(id_col), F.col(text_col)
-    )
-    return source.mapInPandas(tag_batches, schema=MENTIONS)
+    return documents.select(*cols).mapInPandas(tag_batches, schema=MENTIONS)
 
 
 def tag_documents_joined(

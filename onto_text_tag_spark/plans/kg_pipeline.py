@@ -44,7 +44,15 @@ class KGResult:
 def extract_texts(documents: DataFrame) -> DataFrame:
     """P1: ensure a ``text`` column exists, extracting from html where
     absent.  Column pruning matters at scale: when ``text`` is already
-    materialized the ``html:binary`` column is never read."""
+    materialized the ``html:binary`` column is never read.
+
+    ``jobs/kg_build.py`` no longer uses this: it hands the corpus to
+    ``tag_documents(..., html_col="html")``, whose one tagging kernel
+    takes ``text`` or extracts html per row, without this plan's second
+    scan and extract-UDF stage.  Remaining callers: ``build_kg``,
+    ``plans/kg_absorb.py`` and ``plans/kg_dict_update.py``.  They keep
+    this two-branch plan because no benchmark workload measures them.
+    """
     has_text = "text" in documents.columns
     has_html = "html" in documents.columns
     if has_text and has_html:

@@ -87,11 +87,7 @@ def local_df(spark: SparkSession, rows, schema):
 
         return spark.createDataFrame(
             to_arrow_schema(schema).empty_table(), schema)
-    if isinstance(rows[0], dict):
-        pdf = pd.DataFrame(rows, columns=names)
-    else:
-        pdf = pd.DataFrame(rows, columns=names)
-    return spark.createDataFrame(pdf, schema)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
 
 
 def get_spark(

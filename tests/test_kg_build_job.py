@@ -86,6 +86,10 @@ def test_kg_build_clean_then_resume(job_tmp, corpus):
         if d.startswith("pred=")
     )
     assert preds == ["pred=co_occurs_with", "pred=is_a", "pred=mentions"]
+    # doc_terms is written at core width (local[4]), not at the 1-2
+    # partitions AQE coalesces its small shuffle to
+    with open(os.path.join(out_dir, "doc_terms", "_MANIFEST.json")) as fh:
+        assert json.load(fh)["n_files"] == 4
     with open(os.path.join(out_dir, "triples", "_MANIFEST.json")) as fh:
         manifest = json.load(fh)
     assert manifest["total_rows"] == clean["n_triples"]

@@ -234,6 +234,54 @@ def test_fused_html_tagging_plan_prunes_text(spark, tmp_path):
     assert "html" not in tplan.split("ReadSchema")[1][:60]
 
 
+def test_html_fallback_for_null_text_matches_extract_texts(spark, tmp_path):
+    """With both columns, ``html_col`` is the fallback for null-text
+    rows: one tagging kernel takes ``text`` where it is set and extracts
+    html elsewhere.  It must tag exactly what ``extract_texts`` + text
+    tagging does, in one MapInPandas over one scan (no extract-UDF
+    stage, no union of a second scan, no shuffle)."""
+    from onto_text_tag_spark.dictionary import build_dictionary_rows
+    from onto_text_tag_spark.plans.kg_pipeline import (
+        extract_texts,
+        load_ontology_rows,
+    )
+
+    p = str(tmp_path / "mixed.parquet")
+    base = documents_df(spark, n_docs=60)
+    urls = sorted(r.url for r in base.select("url").collect())
+    null_text, both_null = urls[::4], urls[1]
+    # text that is not in the html: tagging it proves text wins when set
+    edited = urls[2::4]
+    base.select(
+        "url",
+        F.when(F.col("url").isin(null_text + [both_null]), F.lit(None))
+        .when(F.col("url").isin(edited),
+              F.concat("text", F.lit(" Caffeine improves alertness.")))
+        .otherwise(F.col("text")).alias("text"),
+        F.when(F.col("url") == both_null, F.lit(None))
+        .otherwise(F.col("html")).alias("html"),
+    ).write.parquet(p)
+    m = spark.read.parquet(p)
+    assert m.where("text IS NULL").count() == len(null_text) + 1
+    rows = build_dictionary_rows(load_ontology_rows(None, None))
+
+    fused = tag_documents(m, rows, html_col="html")
+    ref = tag_documents(extract_texts(m), rows)
+    assert fused.count() > 0
+    assert fused.exceptAll(ref).count() == 0
+    assert ref.exceptAll(fused).count() == 0
+    # the null-text rows were tagged, from their html
+    assert fused.where(F.col("url").isin(null_text)).count() > 0
+
+    plan = fused._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    for node in ("ArrowEvalPython", "Union", "Exchange"):
+        assert node not in plan, node
+    # the trade: html is read for every row (text-only calls keep it
+    # out of the scan: test_fused_html_tagging_plan_prunes_text)
+    assert "ReadSchema: struct<url:string,text:string,html:binary>" in plan
+
+
 def test_matcher_equivalence_on_real_reference_dictionary():
     """TokenIndexMatcher == AhoCorasick on the reference's REAL 3,818-row
     termlist (static/test_terms.tsv): 3,645 distinct surfaces, 1,336
